@@ -15,34 +15,48 @@ import org.apache.spark.sql.SparkSession
   * projection-heavy queries).
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+
+  /** The local session every main builds: `local[cpus]` with as many
+    * shuffle partitions, UTC session time zone, no UI; `conf` adds the
+    * caller's own settings.
+    */
+  def localSession(appName: String, cpus: String, logLevel: String,
+      conf: (String, String)*): SparkSession = {
+    val builder = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName("graft-bench")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE partition-coalescing policy — A/B'd in r17 (OPTIMIZATION_r17
-      // .md): bytes-first coalescing (parallelismFirst=false, guide §2.2)
-      // halves the sub-second relational tail (q44 0.41×, q52 0.48×, q26
-      // 0.50×) but serializes CPU-dense small-byte stages (t12 2.11×,
-      // r47 1.90×, r45 1.56× — object aggs and store-write fanout drop
-      // to one task), netting a 1.02× WASH on the mixed battery. Keep
-      // Spark's default (parallelism-first); the knob stays for
-      // experiments.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 
-    // ---- warmup: JVM/codegen/scan paths, not billed to any query ----
+  /** JVM/codegen/scan-path warmup, not billed to any query: touches
+    * every table of `sfDir` and exercises the scan/agg codegen paths.
+    */
+  def warmup(spark: SparkSession, sfDir: String): Unit = {
     Tables.register(spark, sfDir)
     Tables.names.foreach(n => spark.table(n).limit(1).collect())
     spark.range(1 << 20).selectExpr("sum(id)").collect()
     spark.table("lineitem").groupBy("l_returnflag").count().collect()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // AQE partition-coalescing policy stays Spark's default
+    // (parallelism-first) — A/B'd in r17 (OPTIMIZATION_r17.md):
+    // bytes-first coalescing (parallelismFirst=false, guide §2.2) halves
+    // the sub-second relational tail (q44 0.41×, q52 0.48×, q26 0.50×)
+    // but serializes CPU-dense small-byte stages (t12 2.11×, r47 1.90×,
+    // r45 1.56× — object aggs and store-write fanout drop to one task),
+    // netting a 1.02× WASH on the mixed battery.
+    val spark = localSession("graft-bench", cpus, "WARN",
+      "spark.sql.adaptive.enabled" -> "true")
+    warmup(spark, sfDir)
 
     // best-of-N per query: single-sample timings on a shared box swing
     // several-x from GC/JIT/CPU contention; the minimum is the stable

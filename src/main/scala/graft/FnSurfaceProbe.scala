@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: sweeps a battery of commonly-used ClickHouse scalar
   * function spellings through the embedded engine (translate + execute
   * on a one-row frame) and reports OK / FAIL per name — the gap-finder
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object FnSurfaceProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .appName("fn-surface-probe")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.localSession("fn-surface-probe", "2", "ERROR")
     val root = java.nio.file.Files.createTempDirectory("graft_fnprobe_").toString
     spark.conf.set("spark.sql.catalog.chfn",
       classOf[graft.catalog.ClickHouseCatalog].getName)

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev measurement tool (optimization guide §1): run one gate query by
   * name and attribute its wall time to Spark JOBS — job id, duration,
@@ -26,23 +25,13 @@ object GateProfile {
     val gate = args(1)
     val iters = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-gate-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession("graft-gate-profile", cpus, "WARN",
+      "spark.sql.adaptive.enabled" -> "true")
 
     val g = SparkEntry.gateQueries.find(_.name == gate)
       .getOrElse(sys.error(s"no such gate: $gate (${SparkEntry.gateQueries.map(_.name).mkString(", ")})"))
 
-    // warmup (mirrors Bench)
-    Tables.register(spark, sfDir)
-    Tables.names.foreach(n => spark.table(n).limit(1).collect())
-    spark.range(1 << 20).selectExpr("sum(id)").collect()
+    Bench.warmup(spark, sfDir)
 
     val jobs = mutable.LinkedHashMap.empty[Int, JobRow]
     val stageToJob = mutable.HashMap.empty[Int, Int]

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: prints the physical plan of selected gate queries so the
   * shuffle/broadcast/pushdown shape can be audited (scale review).
   * Usage: runMain graft.PlanAudit <sfDir> <queryName> [<queryName>...]
@@ -10,15 +8,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q08_join3_topn", "q35_star_join")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession("graft-plan-audit", "8", "WARN",
+      "spark.sql.adaptive.enabled" -> "true")
     val byName = SparkEntry.gateQueries.map(g => g.name -> g).toMap
     // GRAFT_PLAN_OUT=<dir>: additionally write one <query>.txt per query
     // with the FULL `explain("formatted")` + the AQE-finalized executed

@@ -74,6 +74,28 @@ object Tables {
     (f.length(), f.lastModified())
   }
 
+  /** A corpus-constant memo over `table`: every entry keys on (session,
+    * dir, [[dataToken]] of `table`). The memo builds its own key, so the
+    * memo law holds by construction — no caller can key without the token.
+    */
+  final class CorpusMemo[V](table: String) {
+    private val entries =
+      scala.collection.concurrent.TrieMap.empty[(SparkSession, String, (Long, Long)), V]
+
+    def keys: Iterable[(SparkSession, String, (Long, Long))] = entries.keys
+    def values: Iterable[V] = entries.values
+
+    /** The memoized value for (`s`, `dir`) at the corpus' current token;
+      * a hit that fails `valid` is dropped and recomputed.
+      */
+    def apply(s: SparkSession, dir: String, valid: V => Boolean = (_: V) => true)(
+        compute: => V): V = {
+      val key = (s, dir, dataToken(dir, table))
+      entries.get(key).foreach(v => if (!valid(v)) entries.remove(key, v))
+      entries.getOrElseUpdate(key, compute)
+    }
+  }
+
   // one registration per (session, dir): every gate query calls register,
   // and re-reading 10 parquet footers per query dominates small-query
   // latency; key on the session so concurrent suites stay isolated

@@ -234,13 +234,7 @@ object Verify {
     // optional dev-only name filter: Verify <sfDir> <outDir> [name ...]
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.localSession("graft-verify", cpus, "WARN")
     new java.io.File(outDir).mkdirs()
     // gate bodies consult this to emit their own body-time store
     // snapshots into the audit dir (pre-materialization evidence)

@@ -55,17 +55,8 @@ final class MockClickHouseHttp extends AutoCloseable {
     */
   @volatile var wireReadGroup: Int = 1
 
-  /** When true, `wire_read` carries a NESTED-COMPOSITE column
-    * `nest Array(Tuple(Int64, String))` — exercises the columnar read
-    * path's row-decode-then-pack fallback on array-of-struct schemas
-    * (the round-14 ColumnarPack extension).
-    */
-  @volatile var wireReadNested: Boolean = false
-
   private def wireReadCols: Seq[(String, String)] =
     Seq("id" -> "Int64", "v" -> "Float64", "tag" -> "String") ++
-      (if (wireReadNested) Seq("nest" -> "Array(Tuple(Int64, String))")
-       else Nil) ++
       (0 until wireReadExtraCols).map(i => s"w$i" -> "Float64")
 
   /** When true, `wire_read` DATA streams abort at the transport level
@@ -228,12 +219,6 @@ final class MockClickHouseHttp extends AutoCloseable {
         encs(1).write(out, java.lang.Double.valueOf(i * 0.5))
         encs(2).write(out, s"tag_${i % 1000}")
         var w = 3
-        if (wireReadNested) {
-          // two (Int64, String) tuples per row — enough structure to pay
-          // real nested decode cost, small enough to stay row-dominated
-          encs(3).write(out, Seq((i, s"e${i % 50}"), (i + 1, s"f${i % 50}")))
-          w = 4
-        }
         while (w < encs.length) {
           encs(w).write(out, java.lang.Double.valueOf(i * 0.25 + w))
           w += 1

@@ -1,18 +1,22 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graft.bridge
+
+import graft.pushdown.{ChAsOfJoin, ClickHouseFunctionPushdown}
 
 /** Point-in-time (as-of) join: for every left row, the latest right row
   * with `rightTs <= leftTs` in the same key group.
   *
-  * Spark lacks this operator; per the custom-operator preference order we
-  * COMPOSE built-ins rather than write a custom physical node: both
-  * sides union into one tagged stream, a single window pass per key
-  * (ordered by time, right-before-left on ties) carries the most recent
-  * right payload forward via last(ignoreNulls), and left rows filter out
-  * with their match attached.
+  * Spark lacks this operator. Every entry point builds the one logical
+  * [[graft.pushdown.ChAsOfJoin]] node and lowers it through
+  * [[graft.pushdown.ChAsOfJoin.expand]]: both sides union into one
+  * tagged stream, a single window pass per key (ordered by time,
+  * right-before-left on ties) carries the most recent right payload
+  * forward via last(ignoreNulls), and left rows filter out with their
+  * match attached.
   *
   * Scale shape: ONE shuffle on the key column (vs the naive
   * range-join/correlated-subquery which explodes to |L|x|R| per key);
@@ -26,7 +30,7 @@ object AsOfJoin {
   /** @param left       rows to enrich
     * @param right      rows providing the as-of payload
     * @param keyCol     equi-key column name (present on both sides)
-    * @param leftTs     left event-time column (long or timestamp)
+    * @param leftTs     left event-time column (same type as `rightTs`)
     * @param rightTs    right event-time column
     * @param rightOrder tie-break column on the right side
     * @param payload    right-side columns to attach (prefixed `asof_`)
@@ -39,8 +43,8 @@ object AsOfJoin {
       rightTs: String,
       rightOrder: String,
       payload: Seq[String]): DataFrame =
-    compose(left, right, Seq(keyCol), leftTs, rightTs, rightOrder, payload,
-      leftJoin = true)
+    join(left, right, Seq(keyCol), leftTs, rightTs, rightOrder, payload,
+      leftJoin = true, planned = false)
 
   /** Multi-key variant: the match requires EVERY key pair equal (the
     * symbol+venue quote lookup; ClickHouse ASOF accepts any number of
@@ -54,8 +58,8 @@ object AsOfJoin {
       rightTs: String,
       rightOrder: String,
       payload: Seq[String]): DataFrame =
-    compose(left, right, keyCols, leftTs, rightTs, rightOrder, payload,
-      leftJoin = true)
+    join(left, right, keyCols, leftTs, rightTs, rightOrder, payload,
+      leftJoin = true, planned = false)
 
   /** Inner variant (ClickHouse `ASOF JOIN` without LEFT): left rows with
     * no match are DROPPED instead of NULL-padded. Matched-ness is the
@@ -70,8 +74,8 @@ object AsOfJoin {
       rightTs: String,
       rightOrder: String,
       payload: Seq[String]): DataFrame =
-    compose(left, right, Seq(keyCol), leftTs, rightTs, rightOrder, payload,
-      leftJoin = false)
+    join(left, right, Seq(keyCol), leftTs, rightTs, rightOrder, payload,
+      leftJoin = false, planned = false)
 
   /** Direction/strictness variant: `op` is the ON inequality
     * `rightTs OP leftTs`, one of `<=` (default elsewhere: latest right
@@ -90,71 +94,18 @@ object AsOfJoin {
       payload: Seq[String],
       op: String,
       leftJoin: Boolean): DataFrame =
-    compose(left, right, keyCols, leftTs, rightTs, rightOrder, payload,
-      leftJoin, op)
-
-  private def compose(
-      left: DataFrame,
-      right: DataFrame,
-      keyCols: Seq[String],
-      leftTs: String,
-      rightTs: String,
-      rightOrder: String,
-      payload: Seq[String],
-      leftJoin: Boolean,
-      op: String = "<="): DataFrame = {
-    require(graft.pushdown.ChAsOfJoin.Ops(op),
-      s"as-of join inequality must be one of " +
-        s"${graft.pushdown.ChAsOfJoin.Ops.mkString(", ")}: $op")
-    require(keyCols.nonEmpty, "as-of join needs at least one key column")
-    val payloadStruct = struct(payload.map(right(_)): _*)
-    val kAs = keyCols.indices.map(i => s"__k$i")
-    val r = right.select(
-      keyCols.zip(kAs).map { case (c, a) => col(c).as(a) } ++ Seq(
-      col(rightTs).as("__t"),
-      lit(0).as("__kind"), col(rightOrder).as("__ord"),
-      payloadStruct.as("__payload")): _*)
-    val leftCols = left.columns
-    val l = left.select(
-      keyCols.zip(kAs).map { case (c, a) => col(c).as(a) } ++ Seq(
-      col(leftTs).as("__t"),
-      lit(1).as("__kind"), lit(null).cast(r.schema("__ord").dataType).as("__ord"),
-      lit(null).cast(r.schema("__payload").dataType).as("__payload"),
-      struct(leftCols.map(left(_)): _*).as("__left")): _*)
-    val unioned = r.withColumn("__left", lit(null).cast(l.schema("__left").dataType))
-      .unionByName(l)
-    // direction-aware scan (mirrors ChAsOfJoin.expand): backward ops scan
-    // time ascending (running last = latest right at-or-before), forward
-    // ops descending (earliest right at-or-after); inclusive ops put right
-    // rows first at equal time, strict ops left first; among equal-time
-    // right rows the greatest __ord wins
-    val forward = op == ">=" || op == ">"
-    val strict = op == "<" || op == ">"
-    val w = Window.partitionBy(kAs.map(col): _*)
-      .orderBy(
-        if (forward) col("__t").desc else col("__t").asc,
-        if (strict) col("__kind").desc else col("__kind").asc,
-        col("__ord").asc_nulls_last)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val matched0 = unioned
-      .withColumn("__match", last(col("__payload"), ignoreNulls = true).over(w))
-      .filter(col("__kind") === 1)
-    val matched =
-      if (leftJoin) matched0 else matched0.filter(col("__match").isNotNull)
-    val leftOut = leftCols.map(c => matched.col(s"__left.$c").as(c))
-    val payloadOut = payload.map(c => matched.col(s"__match.$c").as(s"asof_$c"))
-    matched.select(leftOut ++ payloadOut: _*)
-  }
+    join(left, right, keyCols, leftTs, rightTs, rightOrder, payload,
+      leftJoin, planned = false, op)
 
   /** Planner-aware as-of join: identical semantics and output schema to
-    * [[asofJoin]], but routed through the [[graft.pushdown.ChAsOfJoin]]
-    * logical marker so the pushdown rule can collapse it to server-native
-    * `ASOF LEFT JOIN` when both sides reach one ClickHouse store — the
-    * events×quotes workload then executes entirely in the store instead
-    * of pulling both streams into Spark. Any shape the rule cannot
-    * collapse (cross-store, local tables, unparseable children) lowers to
-    * the exact [[asofJoin]] composition during optimization; a session
-    * without the pushdown rule installed gets [[asofJoin]] directly.
+    * [[asofJoin]], but the [[graft.pushdown.ChAsOfJoin]] node is handed
+    * to the optimizer unexpanded so the pushdown rule can collapse it to
+    * server-native `ASOF LEFT JOIN` when both sides reach one ClickHouse
+    * store — the events×quotes workload then executes entirely in the
+    * store instead of pulling both streams into Spark. Any shape the rule
+    * cannot collapse (cross-store, local tables, unparseable children)
+    * lowers through the same `expand` during optimization; a session
+    * without the pushdown rule installed gets the expansion directly.
     */
   def asofJoinPlanned(
       left: DataFrame,
@@ -164,8 +115,8 @@ object AsOfJoin {
       rightTs: String,
       rightOrder: String,
       payload: Seq[String]): DataFrame =
-    planned(left, right, Seq(keyCol), leftTs, rightTs, rightOrder, payload,
-      leftJoin = true)
+    join(left, right, Seq(keyCol), leftTs, rightTs, rightOrder, payload,
+      leftJoin = true, planned = true)
 
   /** Planner-aware multi-key variant (every key pair must match). */
   def asofJoinPlanned(
@@ -176,12 +127,11 @@ object AsOfJoin {
       rightTs: String,
       rightOrder: String,
       payload: Seq[String]): DataFrame =
-    planned(left, right, keyCols, leftTs, rightTs, rightOrder, payload,
-      leftJoin = true)
+    join(left, right, keyCols, leftTs, rightTs, rightOrder, payload,
+      leftJoin = true, planned = true)
 
   /** Planner-aware [[asofJoinInner]]: collapses to server-native
-    * `ASOF JOIN` (inner) on one store, lowers to the local composition
-    * otherwise.
+    * `ASOF JOIN` (inner) on one store, lowers locally otherwise.
     */
   def asofJoinPlannedInner(
       left: DataFrame,
@@ -191,13 +141,13 @@ object AsOfJoin {
       rightTs: String,
       rightOrder: String,
       payload: Seq[String]): DataFrame =
-    planned(left, right, Seq(keyCol), leftTs, rightTs, rightOrder, payload,
-      leftJoin = false)
+    join(left, right, Seq(keyCol), leftTs, rightTs, rightOrder, payload,
+      leftJoin = false, planned = true)
 
   /** Planner-aware direction/strictness variant: `op` as in the
     * eight-argument [[asofJoin]]; collapses to server-native
-    * `ASOF [LEFT] JOIN ... AND rightTs OP leftTs` on one store, lowers to
-    * the direction-aware local composition otherwise.
+    * `ASOF [LEFT] JOIN ... AND rightTs OP leftTs` on one store, lowers
+    * locally otherwise.
     */
   def asofJoinPlanned(
       left: DataFrame,
@@ -209,10 +159,16 @@ object AsOfJoin {
       payload: Seq[String],
       op: String,
       leftJoin: Boolean): DataFrame =
-    planned(left, right, keyCols, leftTs, rightTs, rightOrder, payload,
-      leftJoin, op)
+    join(left, right, keyCols, leftTs, rightTs, rightOrder, payload,
+      leftJoin, planned = true, op)
 
-  private def planned(
+  /** Build the [[graft.pushdown.ChAsOfJoin]] node over the analyzed
+    * plans. `planned` keeps the node for the pushdown rule when the rule
+    * is installed; otherwise it is expanded here, so the node never
+    * reaches the optimizer. The node's `require`s reject a bad operator
+    * or an empty key list.
+    */
+  private def join(
       left: DataFrame,
       right: DataFrame,
       keyCols: Seq[String],
@@ -221,38 +177,35 @@ object AsOfJoin {
       rightOrder: String,
       payload: Seq[String],
       leftJoin: Boolean,
+      planned: Boolean,
       op: String = "<="): DataFrame = {
     val spark = left.sparkSession
-    val installed = spark.experimental.extraOptimizations
-      .contains(graft.pushdown.ClickHouseFunctionPushdown)
-    if (!installed)
-      return compose(left, right, keyCols, leftTs, rightTs, rightOrder,
-        payload, leftJoin, op)
-    // narrow the right side to what the join consumes (the marker node is
-    // opaque to column pruning)
+    // narrow the right side to what the join consumes, under fresh exprIds:
+    // when both sides are filters of one DataFrame (shared lineage) their
+    // outputs carry the same exprIds, and the analyzer's relation
+    // deduplication would then renew the right side's ids underneath the
+    // node's right-side references
     val rCols = (keyCols ++ Seq(rightTs, rightOrder) ++ payload).distinct
-    val r = right.select(rCols.map(right(_)): _*)
+    val r = right.select(rCols.map(c => right(c).as(c)): _*)
     val lPlan = left.queryExecution.analyzed
     val rPlan = r.queryExecution.analyzed
-    def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        name: String): org.apache.spark.sql.catalyst.expressions.AttributeReference =
-      p.output.collectFirst {
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-            if a.name == name => a
-      }.getOrElse(throw new IllegalArgumentException(
-        s"as-of join: no column `$name` in ${p.output.map(_.name).mkString(", ")}"))
+    def attr(p: LogicalPlan, name: String): AttributeReference =
+      p.output.collectFirst { case a: AttributeReference if a.name == name => a }
+        .getOrElse(throw new IllegalArgumentException(
+          s"as-of join: no column `$name` in ${p.output.map(_.name).mkString(", ")}"))
     val payloadAttrs = payload.map(attr(rPlan, _))
-    val node = graft.pushdown.ChAsOfJoin(
+    val node = ChAsOfJoin(
       lPlan, rPlan,
       keyCols.map(attr(lPlan, _)), keyCols.map(attr(rPlan, _)),
       attr(lPlan, leftTs), attr(rPlan, rightTs),
       attr(rPlan, rightOrder),
       payloadAttrs,
       payload.map(c => s"asof_$c"),
-      payloadAttrs.map(_ =>
-        org.apache.spark.sql.catalyst.expressions.NamedExpression.newExprId),
+      payloadAttrs.map(_ => NamedExpression.newExprId),
       leftJoin = leftJoin,
       op = op)
-    org.apache.spark.sql.graft.bridge.ofRows(spark, node)
+    val keep = planned &&
+      spark.experimental.extraOptimizations.contains(ClickHouseFunctionPushdown)
+    bridge.ofRows(spark, if (keep) node else node.expand)
   }
 }

@@ -150,16 +150,19 @@ object Multimodal {
     * + a join; optimization r17, guide §2.4). Kept in lockstep with
     * [[quarantine]] for EVERY input, including a NULL magic check:
     * quarantine's `when(!magicOk, ...)` arm skips on NULL (falls through
-    * to keep), so the conjunct here is coalesce(magicOk, true) — keep ⟺
-    * payload non-null AND minBytes ≤ n_bytes ≤ maxBytes AND NOT
+    * to keep), so the conjunct here is coalesce(magicOk, true); and
+    * quarantine tags an empty payload `empty` before any bound check, so
+    * n_bytes > 0 holds even at minBytes = 0 — keep ⟺ payload non-null
+    * AND n_bytes > 0 AND minBytes ≤ n_bytes ≤ maxBytes AND NOT
     * (magicOk IS FALSE) (OpsSpec pins set equality of the two routes,
-    * including a NULL-magic row).
+    * including a NULL-magic row and an empty payload at minBytes = 0).
     */
   def keepPredicate(minBytes: Long, maxBytes: Long,
-      magicOk: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    col("payload").isNotNull &&
-      length(col("payload")).cast("long").between(minBytes, maxBytes) &&
+      magicOk: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    val nb = length(col("payload")).cast("long")
+    col("payload").isNotNull && nb > 0L && nb.between(minBytes, maxBytes) &&
       coalesce(magicOk, lit(true))
+  }
 
   /** 16-bit SimHash over BYTE shingles of the payload — the d04 text
     * kernel's law applied to opaque media bytes, so payload-level

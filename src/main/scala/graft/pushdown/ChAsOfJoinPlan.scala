@@ -17,10 +17,11 @@ import org.apache.spark.sql.types._
   * as server-native `ASOF LEFT JOIN` (the events×quotes 100 TB workload
   * — neither event stream crosses the wire; extends the join-placement
   * model of reference src/sql.rs:47-59 to the one join type DataFusion's
-  * unparser could not express). Otherwise [[expand]] lowers it to the
-  * tagged-union + window composition of [[graft.ops.AsOfJoin]] — one
-  * shuffle on the key, no |L|×|R| blow-up — so the node NEVER reaches
-  * the planner.
+  * unparser could not express). Otherwise [[expand]] lowers it to a
+  * tagged-union + window composition — one shuffle on the key, no
+  * |L|×|R| blow-up — so the node NEVER reaches the planner. Every entry
+  * point of [[graft.ops.AsOfJoin]] builds this node, so [[expand]] is
+  * the only local as-of lowering.
   *
   * Tie semantics: among equal (key, time) right rows the server's ASOF
   * pick is unspecified (same contract as ClickHouse itself); the local
@@ -77,9 +78,7 @@ case class ChAsOfJoin(
       newLeft: LogicalPlan, newRight: LogicalPlan): ChAsOfJoin =
     copy(left = newLeft, right = newRight)
 
-  /** Lower to the local composition (the exact plan
-    * [[graft.ops.AsOfJoin.asofJoin]] builds through the DataFrame API,
-    * constructed directly in Catalyst): both sides union into one tagged
+  /** Lower to the local composition: both sides union into one tagged
     * stream, a single running `last(payload, ignoreNulls)` window per key
     * carries the latest right payload forward, left rows filter out with
     * their match attached. Output attributes reuse this node's exprIds, so

@@ -45,7 +45,10 @@ object ClickHouseFunctionPushdown extends Rule[LogicalPlan] {
       case _ => false
     }
     lazy val hasPassthrough = plan.exists(_.expressions.exists(containsPassthrough))
-    if (!hasOurScan && !hasPassthrough) return plan
+    // no remote side: an as-of node (two local inputs) still lowers
+    // locally — it must never reach the planner
+    if (!hasOurScan && !hasPassthrough)
+      return plan.transformUp { case aj: ChAsOfJoin => aj.expand }
     if (!hasOurScan && hasPassthrough)
       throw new IllegalStateException(
         "clickhouse()/clickhouse_eval()/clickhouse_fn() require at least one " +

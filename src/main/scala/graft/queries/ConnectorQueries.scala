@@ -260,15 +260,12 @@ object ConnectorQueries {
     * data token): the streaming gates (r20/r27/r45) derive their
     * micro-batch size from it on EVERY invocation — a corpus constant,
     * so pay the scan once per JVM instead of once per bench iteration
-    * (optimization r17). Keyed on [[graft.Tables.dataToken]] (r18, the
-    * round-13 memo law): a regenerated events.parquet changes the token
+    * (optimization r17). A regenerated events.parquet changes the token
     * and the memo recomputes instead of serving a stale constant.
     */
-  private[queries] val evMaxIdCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, (Long, Long)), Long]
+  private[queries] val evMaxIdCache = new graft.Tables.CorpusMemo[Long]("events")
   private[queries] def evMaxId(s: SparkSession, dir: String): Long =
-    evMaxIdCache.getOrElseUpdate((s, dir, graft.Tables.dataToken(dir, "events")),
-      s.table("events").agg(max("event_id")).head().getLong(0))
+    evMaxIdCache(s, dir)(s.table("events").agg(max("event_id")).head().getLong(0))
 
   /** Shared append-only source table for the r27/r45 streaming-dedup
     * gates, content-fingerprinted against the events corpus.
@@ -746,7 +743,7 @@ object ConnectorQueries {
             // pushdown, /root/reference/src/federation.rs:19-43).
             // COST CONTRACT: the probe is O(index) per micro-batch — at
             // a 100 TB corpus the batch cadence is bounded by index scan
-            // speed. graft.FpProbe's 1x->10x A/B (BASELINE.md round-14)
+            // speed. The 1x->10x index A/B (BASELINE.md round-14 r27)
             // shows NOT IN flat and a sort-merge formulation 100x worse
             // (per-batch sorts); when the index outgrows scan bandwidth
             // the scale path is r45's fp-sharded index (probe stays

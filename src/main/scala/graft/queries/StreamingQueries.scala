@@ -33,17 +33,15 @@ object StreamingQueries {
     * sentinel parquet and re-scanning events for max(ts) every time
     * (optimization r17 — input staging is build-once like ensureStore;
     * the drain itself still runs end to end with a fresh checkpoint per
-    * invocation). r18 hardening: keyed on [[graft.Tables.dataToken]]
-    * (round-13 memo law — a regenerated corpus can't serve stale
-    * staging), cache hits revalidate the staged file still exists (an
-    * external tmp cleaner removing /dev/shm contents mid-JVM triggers a
-    * rebuild, not a permanent failure), and a JVM shutdown hook reaps
-    * every staged dir (they're session-memoized, so the per-run finally
-    * can't delete them).
+    * invocation). r18 hardening: a [[graft.Tables.CorpusMemo]] (round-13
+    * memo law — a regenerated corpus can't serve stale staging), cache
+    * hits revalidate the staged file still exists (an external tmp
+    * cleaner removing /dev/shm contents mid-JVM triggers a rebuild, not
+    * a permanent failure), and a JVM shutdown hook reaps every staged dir
+    * (they're session-memoized, so the per-run finally can't delete
+    * them).
     */
-  private val sessStageCache =
-    scala.collection.concurrent.TrieMap.empty[
-      (SparkSession, String, (Long, Long)), (String, Long)]
+  private val sessStageCache = new graft.Tables.CorpusMemo[(String, Long)]("events")
   private lazy val stageReaper: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       sessStageCache.values.foreach { case (p, _) =>
@@ -64,50 +62,37 @@ object StreamingQueries {
       .withColumn("ts", graft.Tables.normalizedTs(schema("ts").dataType))
   }
 
-  /** Drain a built streaming DataFrame with AvailableNow into a memory
-    * sink; return the sink table.
-    */
   /** Stateful-shuffle partition count for drained streams: one state
     * store (with its own checkpoint delta files per commit) per
     * partition. r17 A/B at local[32], sf0.1 (OPTIMIZATION_r17.md):
     * 8 beats 32 by 1.37× (state-store open/commit fanout dominates even
     * the compute-heavy q47 batch) and beats 4 by 1.12× — 8 IS the sweet
-    * spot, measured, not assumed. GRAFT_DRAIN_PARTS overrides for
-    * experiments; at cluster scale state partitioning is sized to the
-    * key cardinality/executor count by the deployment, not this drain
-    * helper (which only serves the finite replayable-batch gates).
-    */
-  private[queries] def drainPartitions(spark: SparkSession): String =
-    sys.env.getOrElse("GRAFT_DRAIN_PARTS", "8")
-
-  /** State-store provider for drained streams, env-keyed for A/Bs
-    * (`GRAFT_STATE_PROVIDER=rocksdb` or a provider class name; unset =
-    * Spark's default HDFS-backed in-memory provider). r18 interleaved
-    * A/B ×2 per side, min-merged, drain subset at local[32]/sf0.1
-    * (OPTIMIZATION_r18.md): RocksDB measured 1.26–1.37× WORSE on
-    * q40/q41/q47/q55 (JNI + per-commit SST churn on checkpoint-lifetime
-    * state that fits comfortably in memory), flat on q54, noise-level on
-    * q42, with flat controls (q35/r27 ≈ 1.04) — the default stays. At
+    * spot, measured, not assumed. At cluster scale state partitioning is
+    * sized to the key cardinality/executor count by the deployment, not
+    * this drain helper (which only serves the finite replayable-batch
+    * gates).
+    *
+    * The state-store provider stays Spark's default HDFS-backed
+    * in-memory one. r18 interleaved A/B ×2 per side, min-merged, drain
+    * subset at local[32]/sf0.1 (OPTIMIZATION_r18.md): RocksDB measured
+    * 1.26–1.37× WORSE on q40/q41/q47/q55 (JNI + per-commit SST churn on
+    * checkpoint-lifetime state that fits comfortably in memory), flat on
+    * q54, noise-level on q42, with flat controls (q35/r27 ≈ 1.04). At
     * 100 TB-stream scale, state that outgrows executor memory is exactly
-    * when RocksDB pays — deployment-sized, like the partition count
-    * above.
+    * when RocksDB pays — deployment-sized, like the partition count.
     */
-  private[queries] def stateProvider: Option[String] =
-    sys.env.get("GRAFT_STATE_PROVIDER").map {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case other => other
-    }
+  private[queries] val DrainPartitions = "8"
 
+  /** Drain a built streaming DataFrame with AvailableNow into a memory
+    * sink; return the sink table.
+    */
   private[queries] def drain(spark: SparkSession, built: DataFrame, mode: String): DataFrame = {
     val sink = s"graft_stream_${runSeq.incrementAndGet()}"
     // one state-store instance per shuffle partition, each with its own
     // checkpoint delta files; the checkpoint goes to tmpfs when available
     // (state commit latency is fsync-bound, not compute-bound)
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", drainPartitions(spark))
-    stateProvider.foreach(p =>
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", p))
+    spark.conf.set("spark.sql.shuffle.partitions", DrainPartitions)
     val ckBase = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
       sys.props("java.io.tmpdir")
     val ck = s"$ckBase/graft_ck_$sink"
@@ -209,14 +194,10 @@ object StreamingQueries {
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
         stageReaper
-        val stageKey = (s, dir, graft.Tables.dataToken(dir, "events"))
         // revalidate a cache hit: the staged events copy must still exist
         // (tmp cleaners can reap /dev/shm mid-JVM) — rebuild on miss
-        sessStageCache.get(stageKey).foreach { case (p, _) =>
-          if (!new java.io.File(p, "events.parquet").isFile)
-            sessStageCache.remove(stageKey)
-        }
-        val (stagePath, maxTus) = sessStageCache.getOrElseUpdate(stageKey, {
+        val (stagePath, maxTus) = sessStageCache(s, dir,
+            valid = p => new java.io.File(p._1, "events.parquet").isFile) {
           val ev = graft.Tables.load(s, dir, "events")
           val mx = ev.agg(max(unix_micros(col("ts")))).head.getLong(0)
           // stage dir: the raw events file + one sentinel row per user at
@@ -245,7 +226,7 @@ object StreamingQueries {
           java.nio.file.Files.move(part.toPath, stage.toPath.resolve("zz_sentinel.parquet"))
           org.apache.commons.io.FileUtils.deleteQuietly(sentTmp)
           (stage.getPath, mx)
-        })
+        }
 
         val stream = s.readStream.schema(rawSchema)
           .option("pathGlobFilter", "*.parquet").parquet(stagePath)
@@ -259,9 +240,7 @@ object StreamingQueries {
 
         val sink = s"graft_stream_${runSeq.incrementAndGet()}"
         val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", drainPartitions(s))
-        stateProvider.foreach(p =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p))
+        s.conf.set("spark.sql.shuffle.partitions", DrainPartitions)
         val ckBase = if (new java.io.File("/dev/shm").isDirectory) "/dev/shm"
           else sys.props("java.io.tmpdir")
         val ck = s"$ckBase/graft_ck_$sink"

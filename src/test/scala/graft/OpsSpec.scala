@@ -382,6 +382,31 @@ class OpsSpec extends AnyFunSuite {
     assert(got(91L).contains(12L)) // same-instant view matches; max event_id wins ties
     assert(got(92L).isEmpty)       // no view at-or-before 40
     assert(got(93L).isEmpty)       // key with no right rows
+
+    // shared lineage (the q38 shape): both sides are filters of ONE
+    // DataFrame, so both children carry the same exprIds — through the
+    // eager expansion and through the node the pushdown rule lowers
+    val s2 = spark.newSession()
+    GraftSession.install(s2)
+    val events = s2.createDataFrame(Seq(
+      (1L, 100L, 10L, "view"), (1L, 200L, 11L, "view"), (1L, 200L, 12L, "view"),
+      (2L, 50L, 20L, "view"), (1L, 150L, 90L, "purchase"),
+      (1L, 200L, 91L, "purchase"), (2L, 40L, 92L, "purchase"),
+      (3L, 10L, 93L, "purchase"), (2L, 60L, 94L, "purchase")))
+      .toDF("user_id", "tus", "event_id", "event_type")
+    val sharedViews = events.filter(col("event_type") === "view")
+    val sharedPurchases = events.filter(col("event_type") === "purchase")
+    val want = Map(90L -> Some(10L), 91L -> Some(12L), 92L -> None,
+      93L -> None, 94L -> Some(20L))
+    val joins: Seq[(DataFrame, DataFrame) => DataFrame] = Seq(
+      AsOfJoin.asofJoin(_, _, "user_id", "tus", "tus", "event_id", Seq("event_id")),
+      AsOfJoin.asofJoinPlanned(_, _, "user_id", "tus", "tus", "event_id", Seq("event_id")))
+    joins.foreach { join =>
+      val shared = join(sharedPurchases, sharedViews)
+        .select("event_id", "asof_event_id")
+        .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long]))
+      assert(shared.toMap == want && shared.length == want.size)
+    }
   }
 
   test("multimodal: media table schema + deterministic stub decode") {
@@ -458,6 +483,18 @@ class OpsSpec extends AnyFunSuite {
       minBytes = 10, maxBytes = 50, magicOk = nullMagic))
       .select("media_id").collect().map(_.getLong(0)).toSet
     assert(pNull == qNull.collect { case (id, "keep") => id }.toSet)
+
+    // empty-payload lockstep: at minBytes = 0 the bounds admit 0 bytes,
+    // but quarantine tags an empty payload `empty` first — keepPredicate
+    // must drop it too
+    val q0 = Multimodal.quarantine(media, minBytes = 0, maxBytes = 50,
+      magicOk = lit(true))
+      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
+    assert(q0(2L) == "quarantine")
+    val p0 = media.filter(Multimodal.keepPredicate(
+      minBytes = 0, maxBytes = 50, magicOk = lit(true)))
+      .select("media_id").collect().map(_.getLong(0)).toSet
+    assert(p0 == q0.collect { case (id, "keep") => id }.toSet)
   }
 
   test("multimodal: byte-histogram features are L1-normalized array<double>") {

@@ -6,12 +6,13 @@ import java.nio.file.attribute.FileTime
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The round-13 memo law applied to the r17 corpus-constant memos
-  * (VERDICT r17 item 7): evMaxId / autoK key on
-  * [[graft.Tables.dataToken]] — (file length, mtime) of the corpus
-  * parquet — so an in-place corpus regeneration can never serve a stale
-  * constant. The pin: a touched corpus file yields a NEW cache entry
-  * (the memo recomputed) instead of a hit on the old key.
+/** The round-13 memo law applied to the corpus-constant memos
+  * (VERDICT r17 item 7): evMaxId / autoK / the exact ANN pairs key on
+  * [[graft.Tables.dataToken]] through [[graft.Tables.CorpusMemo]] —
+  * (file length, mtime) of the corpus parquet — so an in-place corpus
+  * regeneration can never serve a stale constant. The pin: a touched
+  * corpus file yields a NEW cache entry (the memo recomputed) instead of
+  * a hit on the old key.
   */
 class MemoTokenSpec extends AnyFunSuite {
 
@@ -81,5 +82,21 @@ class MemoTokenSpec extends AnyFunSuite {
     val k2 = SimilarityQueries.autoK(spark, dir)
     assert(entries == 2, "touched corpus must invalidate the memo key")
     assert(k1 == k2)
+  }
+
+  test("exact-pairs memo recomputes after the embeddings corpus changes on disk") {
+    val dir = stageCorpus()
+    graft.Tables.register(spark, dir)
+    def entries = SimilarityQueries.exactPairsCache.keys
+      .count { case (s, d, _) => (s eq spark) && d == dir }
+    val p1 = SimilarityQueries.exactPairs(spark, dir)
+    assert(entries == 1)
+    SimilarityQueries.exactPairs(spark, dir)
+    assert(entries == 1)
+    Files.setLastModifiedTime(Paths.get(dir, "embeddings.parquet"),
+      FileTime.fromMillis(System.currentTimeMillis() + 5000))
+    val p2 = SimilarityQueries.exactPairs(spark, dir)
+    assert(entries == 2, "touched corpus must invalidate the memo key")
+    assert(p1 == p2 && p1.nonEmpty)
   }
 }
