@@ -1115,19 +1115,28 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
         //
         // r18 (GateProfile r62: the FINAL collapse read ran a 28-task job
         // over a 28-way per-part UNION): ONE multi-file scan with the
-        // part ordinal looked up from _metadata.file_name replaces the
+        // part ordinal looked up from _metadata.file_path replaces the
         // N-way union — plan size drops from O(parts) scan relations to
         // one, which is what survives a 10K-part table at 100 TB. Safe
         // here (unlike registerView's order-preserving Collapsing union,
         // which must NOT bin-pack): every consumer of this view windows
-        // over the EXPLICIT __ch_seq value, never partition order.
+        // over the EXPLICIT __ch_seq value, never partition order. Keyed
+        // on the full path, not the basename: epoch publishes under
+        // .epoch-parts/<marker>/p<id>/ can repeat a basename. The column
+        // holds a URI, not an OS path: the keys take the file index's
+        // qualification, then FileFormat's FILE_PATH extractor
+        // (`new Path(path.toString).toUri.toString`).
         val ordered = withSeq.sortBy { case (f, seq) => (seq, f) }.zipWithIndex
-        val nameToIdx = ordered.flatMap { case ((f, _), i) =>
-          Seq(lit(Paths.get(f).getFileName.toString), lit(i.toLong))
+        val hadoopConf = child.sessionState.newHadoopConf()
+        val pathToIdx = ordered.flatMap { case ((f, _), i) =>
+          val hp = new org.apache.hadoop.fs.Path(f)
+          val qualified = hp.getFileSystem(hadoopConf).makeQualified(hp)
+          Seq(lit(new org.apache.hadoop.fs.Path(qualified.toString).toUri.toString),
+            lit(i.toLong))
         }
         val idx = org.apache.spark.sql.functions.element_at(
-          org.apache.spark.sql.functions.map(nameToIdx: _*),
-          col("_metadata.file_name"))
+          org.apache.spark.sql.functions.map(pathToIdx: _*),
+          col("_metadata.file_path"))
         child.read.schema(schema).parquet(ordered.map(_._1._1): _*)
           .select(col("*"),
             (idx * lit(1L << 40) + col("_metadata.row_index"))
@@ -1756,8 +1765,8 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       val tables = knownTables
       // keyed-collapse slice tokens are an HTTP-transport affordance
       // (per-slice hash-mod predicates inside the aggregation); the
-      // embedded transport executes the statement ONCE and repartitions,
-      // so the token is dropped before translation (leaving `WHERE true`)
+      // embedded transport executes the statement ONCE and fans its
+      // spill out over the streams, so the token is dropped before translation (leaving `WHERE true`)
       val detokened0 = sql.replaceAll(raw"/\*__CH_SLICE__\([^)]*\)\*/", "")
       // SELECT DISTINCT ON (exprs): server-documented sugar for
       // LIMIT 1 BY exprs — textual pre-step so the LIMIT BY machinery
@@ -2254,7 +2263,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     * parenthesis and quoted region. Only a top-level ORDER BY imposes a
     * global order the stream split must preserve; a subquery-only ORDER
     * BY constrains nothing about the outer result, and suppressing the
-    * repartition fan for it would serialize the read for no reason.
+    * spill writer's fan-out for it would serialize the read for no reason.
     */
   private def topLevelOrderBy(sql: String): Boolean = {
     var depth = 0
@@ -2266,7 +2275,7 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
       // ChSql.stringLit escapes quotes with a backslash — skipping the
       // escaped char keeps the scanner's string state honest ('O\'Brien'
       // must not toggle the state twice, or everything after it reads
-      // as in-string and a real top-level ORDER BY gets repartitioned)
+      // as in-string and a real top-level ORDER BY gets dealt round-robin)
       if (inSq) {
         if (c == '\\') i += 1
         else if (c == '\'') inSq = false
@@ -2303,31 +2312,31 @@ final class EmbeddedClickHouse(val root: String) extends ClickHouseClient {
     val dir = spillRoot.resolve(java.util.UUID.randomUUID.toString)
     Files.createDirectories(dir)
     val dirStr = dir.toString
-    // honor the requested stream count for un-ordered results (a server
-    // fans even small results across max_threads streams); an ORDER BY
-    // result keeps its range partitioning so global order survives.
-    // toRdd = INTERNAL rows: spill is UnsafeRow bytes, no external-row
-    // conversion on either side of the "wire"
-    val source =
-      if (df.rdd.getNumPartitions < numStreams && !topLevelOrderBy(sql))
-        df.repartition(numStreams)
-      else df
-    val internal = source.queryExecution.toRdd
+    // ONE execution per statement: toRdd = INTERNAL rows (spill is
+    // UnsafeRow bytes, no external-row conversion on either side of the
+    // "wire"), and under AQE it materializes the shuffle-map stages
+    // exactly once — the final partition count is then metadata. Stream
+    // fan-out comes from the spill writer, never from a re-planned
+    // Dataset: an unordered result with p < numStreams partitions deals
+    // each task's rows round-robin over ceil(numStreams / p) files; an
+    // ORDER BY result keeps one file per range partition so global order
+    // survives.
+    val internal = df.queryExecution.toRdd
+    val p = internal.getNumPartitions
+    val fan =
+      if (p == 0 || p >= numStreams || topLevelOrderBy(sql)) 1
+      else (numStreams + p - 1) / p
     val files = internal.mapPartitionsWithIndex { (i, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val f = Paths.get(dirStr, f"stream-$i%05d.rows")
-        RowSpill.write(f, schema, it)
-        Iterator.single(f.toString)
-      }
+      val paths = (0 until fan).map(k => Paths.get(dirStr, f"stream-$i%05d-$k%05d.rows"))
+      RowSpill.writeDealt(paths, schema, it).iterator.map(_.toString)
     }.collect().toSeq.sorted
-    val n = math.max(1, math.min(numStreams, math.max(files.length, 1)))
+    // contiguous balanced groups (sizes differ by at most one): contiguity
+    // keeps an ordered result's range files in order within and across
+    // handles
+    val n = math.min(math.max(1, numStreams), files.length)
     val groups =
-      if (files.isEmpty) Seq(Seq.empty[String])
-      else {
-        val chunk = math.max(1, (files.length + n - 1) / n)
-        files.grouped(chunk).toSeq
-      }
+      if (n == 0) Seq(Seq.empty[String])
+      else (0 until n).map(g => files.slice(g * files.length / n, (g + 1) * files.length / n))
     (schema, groups.map(g => ChSpillHandle(g, schema.length, schema.json)))
   }
 

@@ -23,28 +23,38 @@ import org.apache.spark.sql.types.StructType
 object RowSpill {
 
   /** Write all of `rows` (any InternalRow; converted to UnsafeRow if
-    * needed) to `path`; returns the row count.
+    * needed) to `path`.
     */
-  def write(path: Path, schema: StructType, rows: Iterator[InternalRow]): Long = {
-    val out = new DataOutputStream(
-      new BufferedOutputStream(Files.newOutputStream(path), 1 << 16))
+  def write(path: Path, schema: StructType, rows: Iterator[InternalRow]): Unit =
+    writeDealt(Seq(path), schema, rows)
+
+  /** Write `rows` dealt round-robin over `paths`: row k goes to
+    * `paths(k % n)`, so one task's result splits into n near-equal
+    * streams without a shuffle. A file is created on its first row only;
+    * returns the paths that received rows, in `paths` order.
+    */
+  def writeDealt(paths: Seq[Path], schema: StructType, rows: Iterator[InternalRow]): Seq[Path] = {
+    val outs = new Array[DataOutputStream](paths.length)
     // rows from a codegen pipeline are UnsafeRow already; anything else
     // (e.g. a LocalTableScan) converts once here
     lazy val toUnsafe = UnsafeProjection.create(schema)
-    var n = 0L
+    var k = 0
     try {
       rows.foreach { r =>
         val u = r match {
           case u: UnsafeRow => u
           case other => toUnsafe(other)
         }
+        if (outs(k) == null)
+          outs(k) = new DataOutputStream(
+            new BufferedOutputStream(Files.newOutputStream(paths(k)), 1 << 16))
         val bytes = u.getBytes
-        out.writeInt(bytes.length)
-        out.write(bytes)
-        n += 1
+        outs(k).writeInt(bytes.length)
+        outs(k).write(bytes)
+        k = if (k + 1 == paths.length) 0 else k + 1
       }
-    } finally out.close()
-    n
+    } finally outs.foreach(o => if (o != null) o.close())
+    paths.indices.filter(outs(_) != null).map(paths)
   }
 
   /** Lazily stream UnsafeRows back from `path` (opens on first hasNext).
