@@ -947,13 +947,12 @@ object HttpClickHouseClient {
         finally out.close()
         if (conn.getResponseCode != 200) throw httpError(conn, h.sql)
         val raw = conn.getInputStream
-        // counter sits ABOVE the read buffer: it must count bytes the
-        // DECODER consumed, not bytes prefetched into the buffer —
-        // layered the other way, a truncated tail already sitting in the
-        // buffer makes mid-row EOF look like a clean end of stream
+        // the counter IS the read buffer, directly under the decoder: it
+        // counts bytes the DECODER consumed, not bytes prefetched — a
+        // buffer above it would make a truncated tail already fetched
+        // look like a clean end of stream
         val counter = new RowBinary.CountingInputStream(
-          new java.io.BufferedInputStream(
-            HttpCodec.wrapInput(conn.getContentEncoding, raw), 1 << 16))
+          HttpCodec.wrapInput(conn.getContentEncoding, raw))
         val in = new DataInputStream(counter)
         val header = RowBinary.readHeader(in)
         // empty plan schema = empty-projection COUNT(*) scan: the remote

@@ -41,12 +41,20 @@ object RowBinary {
 
   // ---- LEB128 unsigned varint ----
 
+  /** A length or count: a non-negative Int, so at most 5 bytes with a
+    * fifth byte of at most 0x07. Anything longer or wider is stream
+    * damage — an IOException, so failover treats it as transport death —
+    * never a wrapped shift or a negative array size.
+    */
   def readVarInt(in: DataInputStream): Int = {
     var shift = 0
     var v = 0
     var b = 0
     do {
       b = in.readUnsignedByte()
+      if (shift == 28 && (b & 0xf8) != 0)
+        throw new java.io.StreamCorruptedException(
+          "RowBinary varint runs past 5 bytes or exceeds Int.MaxValue (corrupt stream)")
       v |= (b & 0x7f) << shift
       shift += 7
     } while ((b & 0x80) != 0)
@@ -90,33 +98,23 @@ object RowBinary {
   }
 
   // ---- little-endian fixed-width primitives ----
+  // One stream call per value: DataInput/DataOutput are big-endian, so
+  // each value is byte-reversed around a single readX/writeX (readLong is
+  // one readFully of 8 bytes). Per-byte calls cost a virtual call each,
+  // and DataOutputStream.write(int) is synchronized.
 
-  private def readShortLE(in: DataInputStream): Short = {
-    val a = in.readUnsignedByte(); val b = in.readUnsignedByte()
-    ((b << 8) | a).toShort
-  }
-  private def readIntLE(in: DataInputStream): Int = {
-    val a = in.readUnsignedByte(); val b = in.readUnsignedByte()
-    val c = in.readUnsignedByte(); val d = in.readUnsignedByte()
-    (d << 24) | (c << 16) | (b << 8) | a
-  }
-  private def readLongLE(in: DataInputStream): Long = {
-    var v = 0L
-    var i = 0
-    while (i < 8) { v |= (in.readUnsignedByte().toLong << (8 * i)); i += 1 }
-    v
-  }
-  private def writeShortLE(out: OutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-  }
-  private def writeIntLE(out: OutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-  }
-  private def writeLongLE(out: OutputStream, v: Long): Unit = {
-    var i = 0
-    while (i < 8) { out.write(((v >> (8 * i)) & 0xff).toInt); i += 1 }
-  }
+  private def readShortLE(in: DataInputStream): Short =
+    java.lang.Short.reverseBytes(in.readShort())
+  private def readIntLE(in: DataInputStream): Int =
+    java.lang.Integer.reverseBytes(in.readInt())
+  private def readLongLE(in: DataInputStream): Long =
+    java.lang.Long.reverseBytes(in.readLong())
+  private def writeShortLE(out: DataOutputStream, v: Int): Unit =
+    out.writeShort(java.lang.Short.reverseBytes(v.toShort))
+  private def writeIntLE(out: DataOutputStream, v: Int): Unit =
+    out.writeInt(java.lang.Integer.reverseBytes(v))
+  private def writeLongLE(out: DataOutputStream, v: Long): Unit =
+    out.writeLong(java.lang.Long.reverseBytes(v))
 
   /** Signed two's-complement little-endian of exactly `width` bytes. */
   private def readBigIntLE(in: DataInputStream, width: Int): java.math.BigInteger = {
@@ -140,12 +138,14 @@ object RowBinary {
         s"unscaled value $v does not fit in $width-byte two's-complement")
     val src = v.toByteArray // big-endian, minimal length, sign-extended
     val sign: Byte = if (v.signum() < 0) -1 else 0
+    val le = new Array[Byte](width)
     var i = 0
-    while (i < width) { // emit little-endian, sign-extend to width
+    while (i < width) { // little-endian, sign-extended to width
       val be = src.length - 1 - i
-      out.write(if (be >= 0) src(be) else sign)
+      le(i) = if (be >= 0) src(be) else sign
       i += 1
     }
+    out.write(le)
   }
 
   /** Unsigned wide-integer read: `width` little-endian bytes, no sign. */
@@ -168,12 +168,14 @@ object RowBinary {
       throw new IllegalArgumentException(
         s"value $v out of range for a $width-byte unsigned integer")
     val src = v.toByteArray // big-endian; may carry one leading 0x00
+    val le = new Array[Byte](width)
     var i = 0
     while (i < width) {
       val be = src.length - 1 - i
-      out.write(if (be >= 0) src(be) else 0)
+      if (be >= 0) le(i) = src(be)
       i += 1
     }
+    out.write(le)
   }
 
   /** Wide wire integer → Decimal(38,0), or a LOUD out-of-range error:
@@ -584,25 +586,45 @@ object RowBinary {
   private def compiles(t: String): Boolean =
     try { decoder(t); true } catch { case _: IllegalArgumentException => false }
 
-  /** FilterInputStream counting consumed bytes — lets readers tell a
-    * CLEAN end-of-stream (EOF before any byte of the next row) from a
-    * TRUNCATED stream (EOF mid-row), which must fail loudly instead of
-    * returning a silently partial result.
+  /** The decoder's read buffer (64 KB, unsynchronized), counting the
+    * bytes it HANDS TO THE DECODER — not the bytes it has fetched. The
+    * count lets readers tell a CLEAN end-of-stream (EOF before any byte
+    * of the next row) from a TRUNCATED stream (EOF mid-row, including
+    * part-way through a bulk readLong), which must fail loudly instead of
+    * returning a silently partial result. Nothing may sit between this
+    * and the decoder's DataInputStream: a buffer above it would count
+    * prefetched bytes as consumed.
     */
-  final class CountingInputStream(in0: java.io.InputStream)
-    extends java.io.FilterInputStream(in0) {
-    private var n = 0L
-    def count: Long = n
-    override def read(): Int = {
-      val b = super.read()
-      if (b >= 0) n += 1
-      b
+  final class CountingInputStream(in: InputStream) extends InputStream {
+    private val buf = new Array[Byte](1 << 16)
+    private var pos = 0
+    private var lim = 0
+    private var base = 0L // bytes handed out before buf(0)
+
+    def count: Long = base + pos
+
+    /** Refill an exhausted buffer; false at end of stream. */
+    private def fill(): Boolean = {
+      base += pos
+      pos = 0
+      lim = math.max(in.read(buf, 0, buf.length), 0)
+      lim > 0
     }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      val r = super.read(b, off, len)
-      if (r > 0) n += r
-      r
-    }
+
+    override def read(): Int =
+      if (pos < lim || fill()) { val b = buf(pos) & 0xff; pos += 1; b }
+      else -1
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      if (len == 0) 0
+      else if (pos < lim || fill()) {
+        val k = math.min(lim - pos, len)
+        System.arraycopy(buf, pos, b, off, k)
+        pos += k
+        k
+      } else -1
+
+    override def close(): Unit = in.close()
   }
 
   /** Row-stream decode: one InternalRow per wire row. `counter` (when
@@ -717,16 +739,16 @@ object RowBinary {
         writeIntLE(out, ((b(0) & 0xff) << 24) | ((b(1) & 0xff) << 16) |
           ((b(2) & 0xff) << 8) | (b(3) & 0xff))
       }
-      case "IPv6" => (out: DataOutputStream, v: Any) => {
-        val b = parseIp(t, v).getAddress
-        if (b.length == 16) out.write(b)
-        else { // dotted-quad text → the server's IPv4-mapped form
-          var i = 0
-          while (i < 10) { out.write(0); i += 1 }
-          out.write(0xff); out.write(0xff)
-          out.write(b)
+      case "IPv6" =>
+        val mapped = new Array[Byte](10) ++ Array[Byte](-1, -1) // ::ffff:
+        (out: DataOutputStream, v: Any) => {
+          val b = parseIp(t, v).getAddress
+          if (b.length == 16) out.write(b)
+          else { // dotted-quad text → the server's IPv4-mapped form
+            out.write(mapped)
+            out.write(b)
+          }
         }
-      }
       case "Float32" => (out: DataOutputStream, v: Any) =>
         writeIntLE(out, java.lang.Float.floatToRawIntBits(v match {
           case f: Float => f
@@ -751,6 +773,7 @@ object RowBinary {
         }
       case _ if t.startsWith("FixedString(") =>
         val n = inner(t, "FixedString").trim.toInt
+        val zeros = new Array[Byte](n)
         (out: DataOutputStream, v: Any) => {
           val b = v match {
             case s: String => s.getBytes(UTF_8)
@@ -759,8 +782,7 @@ object RowBinary {
           }
           require(b.length <= n, s"value longer than $t: ${b.length}")
           out.write(b)
-          var i = b.length
-          while (i < n) { out.write(0); i += 1 }
+          out.write(zeros, 0, n - b.length)
         }
       case "Date" => (out: DataOutputStream, v: Any) => // UInt16 epoch days
         writeShortLE(out, inRange(t, asDays(v), 0L, 65535L).toInt)

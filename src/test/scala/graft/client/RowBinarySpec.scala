@@ -49,6 +49,22 @@ class RowBinarySpec extends AnyFunSuite {
     assert(b128.toByteArray.toSeq === Seq(0x80.toByte, 0x01.toByte))
   }
 
+  test("a corrupt varint length fails loudly as stream damage") {
+    def read(xs: Int*): Int = RowBinary.readVarInt(
+      new DataInputStream(new ByteArrayInputStream(xs.map(_.toByte).toArray)))
+    // an IOException, so replica failover treats it as transport damage.
+    // Six bytes: the shift used to wrap (1 << 35 is 8 as an Int)
+    intercept[java.io.StreamCorruptedException](read(0x80, 0x80, 0x80, 0x80, 0x80, 0x01))
+    // five bytes whose value is negative (all 32 bits set = -1)
+    intercept[java.io.StreamCorruptedException](read(0xff, 0xff, 0xff, 0xff, 0x0f))
+    // ... which used to reach `new Array[Byte](n)` from readString
+    intercept[java.io.StreamCorruptedException](RowBinary.readString(
+      new DataInputStream(new ByteArrayInputStream(
+        Array(0xff, 0xff, 0xff, 0xff, 0x0f, 0x61).map(_.toByte)))))
+    // the widest legal length still reads
+    assert(read(0xff, 0xff, 0xff, 0xff, 0x07) === Int.MaxValue)
+  }
+
   // ---- header ----
 
   test("WithNamesAndTypes header round-trips") {
@@ -77,6 +93,47 @@ class RowBinarySpec extends AnyFunSuite {
   test("Int32 wire bytes are little-endian") {
     assert(enc("Int32", 0x01020304).toSeq ===
       Seq(0x04.toByte, 0x03.toByte, 0x02.toByte, 0x01.toByte))
+  }
+
+  test("Int16/UInt16/Int64/UInt64 wire bytes are little-endian, per width") {
+    def bytes(xs: Int*): Seq[Byte] = xs.map(_.toByte)
+    assert(enc("Int16", 0x0102.toShort).toSeq === bytes(0x02, 0x01))
+    assert(enc("Int16", (-2).toShort).toSeq === bytes(0xfe, 0xff))
+    assert(dec("Int16", Array[Byte](0x02, 0x01)) === 0x0102.toShort)
+    assert(enc("UInt16", 0xfedc).toSeq === bytes(0xdc, 0xfe))
+    assert(dec("UInt16", Array(0xdc.toByte, 0xfe.toByte)) === 0xfedc)
+    assert(enc("Int64", 0x0102030405060708L).toSeq ===
+      bytes(0x08, 0x07, 0x06, 0x05, 0x04, 0x03, 0x02, 0x01))
+    assert(enc("Int64", Long.MinValue).toSeq === bytes(0, 0, 0, 0, 0, 0, 0, 0x80))
+    assert(enc("Int64", -1L).toSeq === Seq.fill(8)((-1).toByte))
+    assert(dec("Int64", bytes(0, 0, 0, 0, 0, 0, 0, 0x80).toArray) === Long.MinValue)
+    assert(dec("Int64", Array.fill(8)((-1).toByte)) === -1L)
+    // 2^64 - 2 and 2^63 + 1: above Long.MaxValue, low byte first
+    val u64a = java.math.BigInteger.ONE.shiftLeft(64).subtract(java.math.BigInteger.TWO)
+    val u64b = java.math.BigInteger.ONE.shiftLeft(63).add(java.math.BigInteger.ONE)
+    assert(enc("UInt64", new java.math.BigDecimal(u64a)).toSeq ===
+      bytes(0xfe, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff, 0xff))
+    assert(enc("UInt64", new java.math.BigDecimal(u64b)).toSeq ===
+      bytes(0x01, 0, 0, 0, 0, 0, 0, 0x80))
+    assert(dec("UInt64", bytes(0x01, 0, 0, 0, 0, 0, 0, 0x80).toArray)
+      .asInstanceOf[Decimal].toJavaBigDecimal.toBigInteger === u64b)
+  }
+
+  test("Float32/Float64 wire bytes are little-endian raw bits (NaN payload, -0.0)") {
+    def bytes(xs: Int*): Seq[Byte] = xs.map(_.toByte)
+    assert(enc("Float32", 1.0f).toSeq === bytes(0x00, 0x00, 0x80, 0x3f))
+    assert(enc("Float32", -2.5f).toSeq === bytes(0x00, 0x00, 0x20, 0xc0))
+    assert(dec("Float32", bytes(0x00, 0x00, 0x20, 0xc0).toArray) === -2.5f)
+    assert(enc("Float64", -0.0).toSeq === bytes(0, 0, 0, 0, 0, 0, 0, 0x80))
+    val negZero = dec("Float64", bytes(0, 0, 0, 0, 0, 0, 0, 0x80).toArray)
+    assert(java.lang.Double.doubleToRawLongBits(negZero.asInstanceOf[Double]) ===
+      java.lang.Double.doubleToRawLongBits(-0.0))
+    // a quiet NaN with a non-canonical payload survives both directions
+    val nanBits = 0x7ff8000000000123L
+    val nanBytes = bytes(0x23, 0x01, 0, 0, 0, 0, 0xf8, 0x7f)
+    assert(enc("Float64", java.lang.Double.longBitsToDouble(nanBits)).toSeq === nanBytes)
+    assert(java.lang.Double.doubleToRawLongBits(
+      dec("Float64", nanBytes.toArray).asInstanceOf[Double]) === nanBits)
   }
 
   test("UInt64 above Long.MaxValue decodes to Decimal(20,0)") {
@@ -287,6 +344,94 @@ class RowBinarySpec extends AnyFunSuite {
     // clean EOF at an exact row boundary is still a clean end
     val rdr2 = reader(full)
     assert(rdr2.readRow() != null && rdr2.readRow() != null && rdr2.readRow() == null)
+  }
+
+  test("the counting buffer counts bytes handed to the decoder, not bytes fetched") {
+    val counter = new RowBinary.CountingInputStream(
+      new ByteArrayInputStream(new Array[Byte](1 << 16)))
+    assert(RowBinary.decoder("Int64").read(new DataInputStream(counter)) === 0L)
+    assert(counter.count === 8L)
+  }
+
+  /** Serves `body` as the response to every request, lz4-coded when the
+    * client asks for it, chunked (no declared length): the client sees a
+    * clean end of the HTTP body exactly where `body` ends.
+    */
+  private def withServer(body: Array[Byte])(f: String => Unit): Unit = {
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
+      ex.getRequestBody.readAllBytes()
+      val lz4 = Option(ex.getRequestHeaders.getFirst("Accept-Encoding")).exists(_.contains("lz4"))
+      val out = if (!lz4) body else {
+        val bos = new ByteArrayOutputStream()
+        val z = new net.jpountz.lz4.LZ4FrameOutputStream(bos)
+        z.write(body); z.close()
+        ex.getResponseHeaders.set("Content-Encoding", "lz4")
+        bos.toByteArray
+      }
+      ex.sendResponseHeaders(200, 0)
+      val os = ex.getResponseBody
+      try os.write(out) finally os.close()
+    })
+    server.start()
+    try f(s"http://127.0.0.1:${server.getAddress.getPort}") finally server.stop(0)
+  }
+
+  test("EOF inside a bulk Float64 read: both read paths deliver the decoded " +
+    "prefix, then fail with a truncation error; a row-boundary cut is a clean end") {
+    // the Float64 leads the row: EOF in a row's FIRST column is the case
+    // only the consumed-byte count can tell from a clean end
+    val cols = Seq("v" -> "Float64", "id" -> "Int64", "tag" -> "String")
+    val schema = StructType(Seq(StructField("v", DoubleType, nullable = false),
+      StructField("id", LongType, nullable = false),
+      StructField("tag", StringType, nullable = false)))
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
+    RowBinary.writeHeader(out, cols)
+    val encs = cols.map(c => RowBinary.encoder(c._2))
+    val rowStart = (0 until 10).map { i =>
+      out.flush()
+      val at = bos.size()
+      encs(0).write(out, i * 0.5); encs(1).write(out, i.toLong); encs(2).write(out, s"t$i")
+      at
+    }
+    out.flush()
+    val full = bos.toByteArray
+    val midFloat = full.take(rowStart(7) + 3) // 3 bytes into row 7's Float64
+    val atBoundary = full.take(rowStart(7))
+    def handle(endpoint: String, codec: String) = HttpQueryHandle(endpoint, "default", "",
+      "SELECT `v`, `id`, `tag` FROM `t`.`t`", schema.json, 5000, 5000, codec)
+    for (codec <- Seq("lz4", "none")) {
+      withServer(midFloat) { ep =>
+        val it = HttpClickHouseClient.streamBatches(handle(ep, codec), schema)
+        try {
+          assert(it.hasNext)
+          val b = it.next()
+          assert(b.numRows === 7, codec)
+          assert((0 until 7).map(r => (b.column(0).getDouble(r), b.column(1).getLong(r))) ===
+            (0 until 7).map(i => (i * 0.5, i.toLong)))
+          assert(b.column(2).getUTF8String(6).toString === "t6")
+          intercept[RowBinary.TruncatedStreamException](it.hasNext)
+        } finally it.close()
+        val rows = HttpClickHouseClient.streamRows(handle(ep, codec), schema)
+        try {
+          val got = (0 until 7).map { _ => assert(rows.hasNext); rows.next().getLong(1) }
+          assert(got === (0L until 7L))
+          intercept[RowBinary.TruncatedStreamException](rows.hasNext)
+        } finally rows.close()
+      }
+      withServer(atBoundary) { ep =>
+        val it = HttpClickHouseClient.streamBatches(handle(ep, codec), schema)
+        try {
+          var n = 0
+          while (it.hasNext) n += it.next().numRows()
+          assert(n === 7, codec)
+        } finally it.close()
+        val rows = HttpClickHouseClient.streamRows(handle(ep, codec), schema)
+        try assert(rows.size === 7, codec) finally rows.close()
+      }
+    }
   }
 
   test("LowCardinality is transparent in RowBinary") {
